@@ -14,6 +14,15 @@ A false positive costs one extra probe row; it can never drop a URL
 the reference would crawl. Net effect at scale: the anti-join's probe
 side shrinks to (true dups + FP rate · new), instead of the whole wave.
 
+The prefilter is the cluster-scale option (``seen_filter="bloom"`` in
+``CrawlConfig.cluster_profile()``): it pays only when the seen set
+dwarfs the wave's probe. At every scale one box runs, the exact
+anti-join alone is faster — 1.63–1.76M vs 0.55–0.62M URLs/s at 8
+cores on the 10^7-URL probe (``scripts/bench_seen_scale.py``,
+BASELINE.md round 5), and the shard-keyed cogroups plus the
+shard-table staging were the largest cost of a small crawl wave — so
+the engine default is ``seen_filter="none"``.
+
 Sharding: ``shard_id = pmod(xxhash64(url_canon), n_shards)``; each
 shard row carries a packed bit array (``bits: binary``). Probing joins
 candidates to their shard row on shard_id and tests k positions per

@@ -125,6 +125,29 @@ def _tagged_keys(keys: DataFrame, kind: str | None, carry: dict[str, str] | None
     return keys.select(*_tagged_cols(kind, tuple(sorted((carry or {}).items()))))
 
 
+def shards_current(manifests: list[dict], table: str) -> bool:
+    """Whether the latest committed ``table`` shards (bloom or cuckoo)
+    cover every committed seen key, from the manifests alone.
+
+    A fetch wave that ran under another ``seen_filter`` added seen keys
+    its shards never saw, and a probe would answer "definitely new" for
+    them. Every commit that writes the shards leaves them current (the
+    engine only writes shards grown from current ones or rebuilt from
+    the full seen set); a checkpoint carries the answer forward in its
+    meta (``CrawlEngine.compact``). A checkpoint without that record
+    counts as stale: a rebuild is always exact."""
+    current = True  # no fetch wave yet: nothing to cover
+    for m in manifests:
+        meta = m.get("meta", {})
+        if meta.get("checkpoint"):
+            current = table in meta.get("current_filters", ())
+        elif table in m["tables"]:
+            current = True
+        elif "fetched" in meta:
+            current = False
+    return current
+
+
 @dataclass
 class CrawlConfig:
     wave_interval_s: float = 60.0
@@ -176,12 +199,14 @@ class CrawlConfig:
     # functions of (wave, row) — deterministic across runs and resume.
     age_boost_every: int | None = None
     age_boost_cap: int = 25
-    use_bloom: bool = True
-    # seen-set prefilter: "bloom" (default; deletions left stale, exactness
-    # guard keeps results correct), "cuckoo" (true deletions — the north
-    # star's recrawl path), or "none" (exact anti-join only). None here
-    # derives from use_bloom for back-compat.
-    seen_filter: str | None = None
+    # seen-set prefilter in front of the exact anti-join: "none"
+    # (default; the anti-join alone — measured fastest at every scale a
+    # single box runs, BASELINE.md), "bloom" (cluster_profile(); pays
+    # off only when the seen set dwarfs the wave — deletions left stale,
+    # the exactness guard keeps results correct) or "cuckoo" (true
+    # deletions — the recrawl path). Switching it between runs of one
+    # crawl is safe: stale shards are rebuilt from the seen set.
+    seen_filter: str = "none"
     bloom_shards: int = 32
     bloom_bits_per_shard: int = 1 << 20
     bloom_hashes: int = 5
@@ -267,6 +292,10 @@ class CrawlConfig:
         - ``output_coalesce=None`` — never coalesce wave output on the
           hot path; small-file compaction is the ``compact_every``
           maintenance job's business;
+        - ``seen_filter="bloom"`` — at the 10^10-key design point the
+          Bloom prefilter shrinks the exact anti-join's probe side to the
+          true duplicates plus false positives; on a single box the
+          anti-join alone is faster (the sandbox default, "none");
         - larger seen-filter shard geometry (10^10-key design point:
           1024 shards × 2^24 bloom bits ≈ 2 GiB of filter, ~0.4% FP at
           10^10 keys; cuckoo buckets scaled to match);
@@ -280,6 +309,7 @@ class CrawlConfig:
         """
         base: dict = dict(
             output_coalesce=None,
+            seen_filter="bloom",
             bloom_shards=1024,
             bloom_bits_per_shard=1 << 24,
             bloom_hashes=5,
@@ -350,7 +380,7 @@ class CrawlEngine:
             if self.cfg.hot_hosts
             else None
         )
-        mode = self.cfg.seen_filter or ("bloom" if self.cfg.use_bloom else "none")
+        mode = self.cfg.seen_filter
         if mode not in ("bloom", "cuckoo", "none"):
             raise ValueError(f"seen_filter must be bloom|cuckoo|none, got {mode!r}")
         self.filter_mode = mode
@@ -364,7 +394,6 @@ class CrawlEngine:
             )
         # state-table name for the filter shards; None disables the prefilter
         self.filter_table = {"bloom": "bloom", "cuckoo": "cuckoo"}.get(mode)
-        self.bloom = self.filter  # back-compat alias
         # per-wave barrier breakdown (seconds per segment), appended by
         # run_wave; scripts/profile_wave.py aggregates it for BASELINE.md
         self.wave_profile: list[dict] = []
@@ -447,12 +476,17 @@ class CrawlEngine:
                 n += pq.ParquetFile(f).metadata.num_rows
         return n
 
-    def _read_filter(self) -> DataFrame | None:
-        """Latest committed shard table of the active seen-filter
-        (bloom or cuckoo), or None if the prefilter is disabled / not
-        yet built."""
+    def _read_filter(self, wave: int) -> DataFrame | None:
+        """Shard table of the active seen-filter (bloom or cuckoo) that
+        covers the committed seen set, or None if the prefilter is
+        disabled / nothing was seen yet. When earlier waves ran under
+        another filter (a config switch on resume), the shards are
+        rebuilt from the full seen set at ``wave`` (persisted: the probe
+        and the shard update both read them)."""
         if self.filter_table is None:
             return None
+        if not shards_current(self.io._manifests(), self.filter_table):
+            return self.filter.update(None, self._read_seen(), wave).persist()
         from crawlers_spark.operators.dedup import BLOOM_SCHEMA, CUCKOO_SCHEMA
 
         shard_schema = CUCKOO_SCHEMA if self.filter_mode == "cuckoo" else BLOOM_SCHEMA
@@ -573,7 +607,7 @@ class CrawlEngine:
           them directly (constant plan depth; no per-wave union chain).
         """
         cfg = self.cfg
-        prof: dict[str, float] = {"wave": wave}
+        prof: dict = {"wave": wave, "seen_filter": self.filter_mode}
         _t = time.monotonic()
 
         def _lap(seg: str) -> None:
@@ -589,7 +623,7 @@ class CrawlEngine:
             if n_frontier == 0:
                 return None
             frontier = self._read_frontier().persist()
-            shards = self._read_filter()
+            shards = self._read_filter(wave)
         else:
             frontier = carry["frontier"]
             shards = carry["shards"]
@@ -627,7 +661,7 @@ class CrawlEngine:
         allowed = flagged.where(F.col("robots_ok")).drop("robots_ok")
         denied_keys = flagged.where(~F.col("robots_ok")).select("url_canon")
 
-        # O5 bloom/cuckoo prefilter guarded by O4 exact anti-join
+        # O4 exact anti-join, behind the O5 bloom/cuckoo prefilter if one is set
         unseen = self.filter.filter_unseen(allowed, shards, seen)
 
         # O8 fetch: pages ⋈ broadcast(candidates) — the wave batch is
@@ -841,7 +875,7 @@ class CrawlEngine:
         attempted_keys = selected.select("url_canon")
         remaining = frontier_disk.join(attempted_keys, "url_canon", "left_anti")
         fresh_links = (
-            self.bloom.filter_unseen(discovered, shards_disk, seen)
+            self.filter.filter_unseen(discovered, shards_disk, seen)
             .join(fetched_keys, "url_canon", "left_anti")
         )
         next_frontier = self._merge_frontier(remaining, retryable, fresh_links)
@@ -922,6 +956,7 @@ class CrawlEngine:
             "meta": {
                 "frontier_in": n_frontier, "fetched": n_fetched,
                 "offers": n_offers, "redirects": n_redirects,
+                "seen_filter": self.filter_mode,
             },
             "stats": {
                 "wave": wave, "frontier": n_frontier, "fetched": n_fetched,
@@ -1241,8 +1276,12 @@ class CrawlEngine:
             return {"wave": wave, "recrawled": 0, "revalidated": n_reval}
         next_frontier = self._merge_frontier(self._read_frontier(), recrawl_rows)
         staged["frontier"] = [self._stage(next_frontier, "frontier", wave, "none")]
-        if self.filter_mode == "cuckoo":
-            shards = self._read_filter()
+        # shards that miss seen keys (waves ran under another filter) are
+        # not touched: a delete could hit a fingerprint never inserted.
+        # The next fetch wave rebuilds them from the tombstone-aware seen
+        # set, which already leaves these keys out.
+        if self.filter_mode == "cuckoo" and shards_current(self.io._manifests(), "cuckoo"):
+            shards = self._read_filter(wave)
             if shards is not None:
                 # ONLY tombstoned keys lose their fingerprint — a
                 # revalidated (304) page stays seen, and deleting its
@@ -1898,13 +1937,19 @@ class CrawlEngine:
         the data listing is bounded. Safe at any point between waves:
         readers and resume see identical state."""
         rel = self.io.compact_table("wave_out")
+        # the checkpoint folds away the manifests shards_current walks,
+        # so it records which shard tables still cover the seen set
+        ms = self.io._manifests()
         # frontier + filter shards + trap denylist are latest-version-wins
         # state; the checkpoint must not fold their historical snapshots
         # together (trap_hosts is monotone today, but folding would both
         # scan every historical snapshot dir on read and resurrect
         # removed hosts if gate semantics ever allow removal — r3 ADVICE)
         self.io.checkpoint(
-            snapshot_tables=("frontier", "bloom", "cuckoo", "trap_hosts", "opic")
+            snapshot_tables=("frontier", "bloom", "cuckoo", "trap_hosts", "opic"),
+            meta={
+                "current_filters": [t for t in ("bloom", "cuckoo") if shards_current(ms, t)]
+            },
         )
         return rel
 

@@ -121,7 +121,7 @@ class SnapshotParquetIO(TableIO):
                 out.append(m)
         return out
 
-    def checkpoint(self, snapshot_tables: tuple[str, ...] = ()) -> None:
+    def checkpoint(self, snapshot_tables: tuple[str, ...] = (), meta: dict | None = None) -> None:
         """Fold the full manifest history into one checkpoint manifest.
 
         Captures the committed dirs of every table at the current wave:
@@ -135,7 +135,9 @@ class SnapshotParquetIO(TableIO):
         commits strictly follow it; older manifest files stay on disk
         untouched for time travel below the checkpoint wave. Typically
         called right after ``compact_table`` so the folded entry is
-        small.
+        small. ``meta`` joins the checkpoint's own meta: facts the
+        caller derives from the folded manifests' meta, which the
+        checkpoint drops.
         """
         ms = self._manifests(use_checkpoint=False)
         if not ms:
@@ -153,7 +155,7 @@ class SnapshotParquetIO(TableIO):
             "wave": ms[-1]["wave"],
             "tables": tables,
             "replaces": sorted(tables),
-            "meta": {"checkpoint": True, "folded_manifests": len(ms)},
+            "meta": {"checkpoint": True, "folded_manifests": len(ms), **(meta or {})},
         }
         tmp = self.root / "_wavelog" / f".tmp-{uuid.uuid4().hex}.json"
         final = (

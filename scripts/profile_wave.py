@@ -18,6 +18,9 @@ WHERE the ~5 s/wave driver barrier goes:
   commit                manifest fsync (driver fs only)
   unpersist             cache cleanup
 
+Each wave's profile (and its manifest meta) also names the
+``seen_filter`` it ran under; the output lists the filters seen.
+
 Usage: python scripts/profile_wave.py [pages] [cores]
 """
 
@@ -64,6 +67,7 @@ def main() -> int:
         "pages": pages,
         "cores": cores,
         "waves": len(waves),
+        "seen_filter": sorted({p["seen_filter"] for p in waves}),
         "wall_s": out["wall_s"],
         "sum_segments_s": round(sum(agg.values()), 2),
         "total_s": agg,

@@ -15,17 +15,22 @@ def test_cluster_profile_removes_sandbox_footguns():
     # 10^10-key seen-filter geometry: ~2 GiB of bloom bits total
     assert c.bloom_shards * c.bloom_bits_per_shard >= 10**10
     assert c.cuckoo_buckets_per_shard > CrawlConfig().cuckoo_buckets_per_shard
+    # the Bloom prefilter pays off only at cluster scale
+    assert c.seen_filter == "bloom"
 
 
 def test_sandbox_defaults_unchanged():
     c = CrawlConfig()
     assert c.output_coalesce == 4
     assert c.pipeline_waves is False
+    assert c.seen_filter == "none"  # exact anti-join only: fastest on one box
 
 
 def test_overrides_win():
-    c = CrawlConfig.cluster_profile(pipeline_waves=False, bloom_shards=7)
+    c = CrawlConfig.cluster_profile(pipeline_waves=False, bloom_shards=7, seen_filter="cuckoo")
     assert c.pipeline_waves is False and c.bloom_shards == 7
+    assert c.seen_filter == "cuckoo"
+    assert CrawlConfig.cluster_profile(seen_filter="none").seen_filter == "none"
     assert c.output_coalesce is None  # untouched profile values stay
 
 

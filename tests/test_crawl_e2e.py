@@ -30,8 +30,12 @@ def fx():
 
 
 def make_engine(spark, fx, name, **cfg_kw):
-    root = STATE / name
-    shutil.rmtree(root, ignore_errors=True)
+    shutil.rmtree(STATE / name, ignore_errors=True)
+    return resume_engine(spark, fx, name, **cfg_kw)
+
+
+def resume_engine(spark, fx, name, **cfg_kw):
+    """A NEW engine on the state dir ``name`` as it is (resume)."""
     seeds = json.loads((fx / "seeds.json").read_text())
     cfg_kw.setdefault("hot_hosts", {"src0.example": 4, "src1.example": 4})
     cfg = CrawlConfig(**cfg_kw)
@@ -41,7 +45,7 @@ def make_engine(spark, fx, name, **cfg_kw):
         seeds,
         spark.read.parquet(str(fx / "robots.parquet")),
         spark.read.parquet(str(fx / "politeness.parquet")),
-        root,
+        STATE / name,
         cfg,
     )
 
@@ -135,15 +139,7 @@ def test_kill_and_resume(spark, fx, crawled):
     part = make_engine(spark, fx, "resume")
     part.run(max_waves=3)
     assert part.io.last_committed_wave() == 3
-    resumed = CrawlEngine(
-        spark,
-        str(fx / "pages.parquet"),
-        json.loads((fx / "seeds.json").read_text()),
-        spark.read.parquet(str(fx / "robots.parquet")),
-        spark.read.parquet(str(fx / "politeness.parquet")),
-        STATE / "resume",
-        CrawlConfig(hot_hosts={"src0.example": 4, "src1.example": 4}),
-    )
+    resumed = resume_engine(spark, fx, "resume")
     resumed.run(max_waves=40)
     assert sorted(map(tuple, resumed.wave_log().collect())) == sorted(
         map(tuple, eng1.wave_log().collect())
@@ -154,13 +150,74 @@ def test_kill_and_resume(spark, fx, crawled):
 
 
 def test_bloom_equals_exact(spark, fx, crawled):
-    """Bloom-accelerated run ≡ bloom-off run (exactness guard, §4.3.2)."""
+    """Bloom-accelerated run ≡ the default exact run (exactness guard,
+    §4.3.2)."""
     eng1, _ = crawled
-    nobloom = make_engine(spark, fx, "nobloom", use_bloom=False)
-    nobloom.run(max_waves=40)
-    assert sorted(map(tuple, nobloom.wave_log().collect())) == sorted(
+    bloom = make_engine(spark, fx, "bloom", seen_filter="bloom")
+    bloom.run(max_waves=40)
+    assert sorted(map(tuple, bloom.wave_log().collect())) == sorted(
         map(tuple, eng1.wave_log().collect())
     )
+
+
+def test_shards_current_tracks_filter_gaps():
+    """Manifest-only staleness test behind the rebuild: shards stay
+    current while every fetch wave writes them, go stale after a fetch
+    wave under another filter, and a checkpoint carries the answer."""
+    from crawlers_spark.plans.wave import shards_current
+
+    def fetch(*tables):
+        return {"tables": {"wave_out": ["w"], **{t: ["s"] for t in tables}},
+                "meta": {"fetched": 1}}
+
+    seeds = {"tables": {"frontier": ["f"]}, "meta": {"seeds": 2}}
+    recrawl = {"tables": {"wave_out": ["w"], "cuckoo": ["s"]}, "meta": {"recrawled": 1}}
+    assert shards_current([seeds], "bloom")  # nothing seen yet
+    assert shards_current([seeds, fetch("bloom"), fetch("bloom")], "bloom")
+    assert not shards_current([seeds, fetch(), fetch("bloom")], "cuckoo")
+    assert not shards_current([seeds, fetch("bloom"), fetch()], "bloom")
+    # a shard write after a gap is a rebuild, and recrawl deletes keep
+    # current shards current
+    assert shards_current([seeds, fetch(), fetch("cuckoo"), recrawl], "cuckoo")
+
+    def ckpt(**meta):
+        return {"tables": {"bloom": ["s"]}, "meta": {"checkpoint": True, **meta}}
+
+    assert shards_current([ckpt(current_filters=["bloom"])], "bloom")
+    assert not shards_current([ckpt(current_filters=[])], "bloom")
+    assert not shards_current([ckpt()], "bloom")  # no record: rebuild
+    assert not shards_current([ckpt(current_filters=["bloom"]), fetch()], "bloom")
+
+
+@pytest.mark.parametrize("mode", ["bloom", "cuckoo"])
+def test_resume_under_another_seen_filter(spark, fx, crawled, mode):
+    """Three waves under the default exact filter, then a resume with a
+    prefilter: the first prefiltered wave rebuilds the shards from the
+    whole seen set, so no URL is fetched twice and the crawl equals the
+    uninterrupted run. (Shards grown from the resumed waves alone
+    answer "definitely new" for URLs seen before the switch.) Under
+    cuckoo, a recrawl then deletes keys seen before the switch — a
+    fingerprint that was never inserted would raise."""
+    from pyspark.sql import functions as F
+
+    eng1, _ = crawled
+    part = make_engine(spark, fx, f"switch_{mode}", seen_filter="none")
+    part.run(max_waves=3)
+    resumed = resume_engine(spark, fx, f"switch_{mode}", seen_filter=mode)
+    resumed.run(max_waves=40)
+    assert resumed.wave_log().groupBy("url_canon").count().where("count > 1").count() == 0
+    assert sorted(map(tuple, resumed.wave_log().collect())) == sorted(
+        map(tuple, eng1.wave_log().collect())
+    )
+    if mode == "cuckoo":
+        early = sorted(
+            r.url for r in resumed.offers().where(F.col("wave") <= 3).collect()
+        )[:3]
+        sitemap = spark.createDataFrame(
+            [(u.split("/")[2], "url", u, "2024-02-01") for u in early],
+            "host string, kind string, loc string, lastmod string",
+        )
+        assert resumed.schedule_recrawls(sitemap)["recrawled"] == len(early) > 0
 
 
 def test_compaction_preserves_state_and_resume(spark, fx, crawled):
@@ -187,17 +244,7 @@ def test_compaction_preserves_state_and_resume(spark, fx, crawled):
     assert before == after
 
     # resume with a NEW engine on the compacted state dir
-    import json as _json
-
-    resumed = CrawlEngine(
-        spark,
-        str(fx / "pages.parquet"),
-        _json.loads((fx / "seeds.json").read_text()),
-        spark.read.parquet(str(fx / "robots.parquet")),
-        spark.read.parquet(str(fx / "politeness.parquet")),
-        STATE / "compacted",
-        CrawlConfig(hot_hosts={"src0.example": 4, "src1.example": 4}),
-    )
+    resumed = resume_engine(spark, fx, "compacted")
     resumed.run(max_waves=40)
     assert sorted(map(tuple, resumed.wave_log().collect())) == sorted(
         map(tuple, eng1.wave_log().collect())
@@ -244,9 +291,10 @@ def test_adaptive_hot_host_salting_identical_output(spark, fx, crawled):
 def test_pipelined_equals_serial(spark, fx, crawled):
     """The pipelined loop ≡ the serial loop (default): identical
     per-wave stats, wave log, and offers — the staging/fetch overlap
-    must be invisible in committed state."""
+    must be invisible in committed state. Runs with the Bloom filter,
+    as cluster_profile() pairs them, so the carried shards are used."""
     eng1, stats1 = crawled  # serial default
-    ser = make_engine(spark, fx, "pipelined_ab", pipeline_waves=True)
+    ser = make_engine(spark, fx, "pipelined_ab", pipeline_waves=True, seen_filter="bloom")
     stats2 = ser.run(max_waves=40)
     key = lambda s: (s["wave"], s["frontier"], s["fetched"], s.get("offers", 0), s["quiesced"])  # noqa: E731
     assert [key(s) for s in stats1] == [key(s) for s in stats2]
@@ -266,7 +314,7 @@ def test_kill_mid_pipeline_resume(spark, fx, crawled):
     from concurrent.futures import ThreadPoolExecutor
 
     eng1, _ = crawled
-    part = make_engine(spark, fx, "pipekill")
+    part = make_engine(spark, fx, "pipekill", seen_filter="bloom")
     part.bootstrap()
     with ThreadPoolExecutor(max_workers=3) as pool:
         p1 = part._start_wave(1, pool, persist_carry=True)
@@ -284,15 +332,7 @@ def test_kill_mid_pipeline_resume(spark, fx, crawled):
     for df in p2["unpersist"] + [p2["next_frontier"], p2["filter_merged"]]:
         if df is not None:
             df.unpersist()
-    resumed = CrawlEngine(
-        spark,
-        str(fx / "pages.parquet"),
-        json.loads((fx / "seeds.json").read_text()),
-        spark.read.parquet(str(fx / "robots.parquet")),
-        spark.read.parquet(str(fx / "politeness.parquet")),
-        STATE / "pipekill",
-        CrawlConfig(hot_hosts={"src0.example": 4, "src1.example": 4}),
-    )
+    resumed = resume_engine(spark, fx, "pipekill", seen_filter="bloom")
     resumed.run(max_waves=40)
     assert sorted(map(tuple, resumed.wave_log().collect())) == sorted(
         map(tuple, eng1.wave_log().collect())
