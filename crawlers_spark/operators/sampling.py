@@ -169,14 +169,18 @@ def with_hash_order_cumsum(
         ).alias("_a")
     )
     aa = F.col("_a")
+    # the fold's zero takes sum()'s result type (bigint for integral
+    # tokens, double for fractional): `aggregate` rejects a merge whose
+    # type differs from the zero's
+    sum_t = bsum.schema["_sum_b"].dataType
     cum_arr = F.transform(
         aa,
         lambda x, i: F.struct(
             x["_bucket"].alias("_bucket"),
             F.aggregate(
                 F.slice(aa, 1, i),
-                F.lit(0).cast("bigint"),
-                lambda acc, y: acc + y["_sum_b"],
+                F.lit(0).cast(sum_t),
+                lambda acc, y: (acc + y["_sum_b"]).cast(sum_t),
             ).alias("_cum_b"),
         ),
     )

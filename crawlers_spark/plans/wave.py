@@ -41,6 +41,7 @@ from dataclasses import dataclass, field
 from functools import lru_cache
 from pathlib import Path
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -123,6 +124,17 @@ def _tagged_keys(keys: DataFrame, kind: str | None, carry: dict[str, str] | None
     ``publication_ts``); everything else is a typed NULL. ``kind=None``
     keeps the input's own ``kind`` column (pre-unioned key frames)."""
     return keys.select(*_tagged_cols(kind, tuple(sorted((carry or {}).items()))))
+
+
+def _local_table(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """A small table of Python rows shipped through Arrow, so Spark
+    plans it as a ``LocalTableScan``. ``createDataFrame`` of a Python
+    list plans a Python RDD instead, and every broadcast of it re-runs a
+    Python-worker ``parallelize`` job (0.3–0.4 s each on 4 cores, twice
+    per wave for the host tables)."""
+    names = [c.split(" ")[0] for c in ddl.split(", ")]
+    cols = list(zip(*rows)) or [()] * len(names)
+    return spark.createDataFrame(pa.table(dict(zip(names, map(list, cols)))), ddl)
 
 
 def shards_current(manifests: list[dict], table: str) -> bool:
@@ -360,8 +372,8 @@ class CrawlEngine:
         # canonicalized seed URLs for SURT-prefix scoping (tiny; built
         # once, reused by every wave's admission filter)
         if self.cfg.surt_scope:
-            _seed_urls = spark.createDataFrame(
-                [(sd["url"],) for sd in seeds], "url string"
+            _seed_urls = _local_table(
+                spark, [(sd["url"],) for sd in seeds], "url string"
             )
             self._scope_seeds = (
                 with_canonical_url(_seed_urls).select("url_canon").persist()
@@ -369,13 +381,14 @@ class CrawlEngine:
         else:
             self._scope_seeds = None
         # offsite map (O13): source -> allowed host, broadcast-sized
-        self.allowed_hosts = spark.createDataFrame(
+        self.allowed_hosts = _local_table(
+            spark,
             [(s["source"], s["allowed_host"]) for s in seeds],
             "src_source string, allowed_host string",
         )
         self.hot_hosts = (
-            spark.createDataFrame(
-                list(self.cfg.hot_hosts.items()), "host string, n_salts int"
+            _local_table(
+                spark, list(self.cfg.hot_hosts.items()), "host string, n_salts int"
             )
             if self.cfg.hot_hosts
             else None
@@ -835,7 +848,8 @@ class CrawlEngine:
             else:
                 from crawlers_spark.functions.domains import registrable_domain
 
-                blk = self.spark.createDataFrame(
+                blk = _local_table(
+                    self.spark,
                     [(b,) for b in sorted(set(cfg.domain_blocklist))],
                     "_blk_site string",
                 )

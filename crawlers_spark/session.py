@@ -2,8 +2,14 @@
 
 Local-mode settings mirror what a multi-executor deployment would use:
 AQE on (skew-join split + partition coalesce), Arrow enabled for every
-pandas-UDF boundary, UTC session timezone (DuckDB-oracle comparability),
-and shuffle partitions sized to cores rather than the 200 default.
+pandas-UDF boundary, UTC session timezone (DuckDB-oracle comparability).
+
+``spark.sql.shuffle.partitions`` is a ceiling, not a task count: AQE
+coalesces every shuffle, persisted frames included, to what its data
+needs — about ``defaultParallelism`` tasks for a tiny crawl wave, never
+more than the ceiling for a large one. Determinism does not rest on the
+partition count: the engine fixes its outputs with total orders (sort
+keys, hash-salted ties), not by which task a row lands in.
 """
 
 from __future__ import annotations
@@ -36,10 +42,17 @@ def get_spark(
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        # deterministic plans: fixed shuffle partitioning per run
+        # upper bound on post-shuffle partitions; AQE coalesces below it
         .config("spark.sql.shuffle.partitions", str(nshuffle))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        # let AQE coalesce PERSISTED frames too (off by default, so a
+        # cached plan keeps all `nshuffle` partitions, and so does every
+        # stage downstream of it): a crawl wave persists its selected /
+        # flagged / unseen / discovered / frontier frames, and at the
+        # fixed count a 150-row wave ran its robots mapInPandas as 32
+        # Python tasks. With this on, task counts follow the wave's data.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

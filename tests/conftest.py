@@ -7,6 +7,8 @@ from crawlers_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("crawlers-spark-tests", cores=8, shuffle_partitions=8)
+    # cores from SPARK_GRAFT_CPUS (local[*] when unset); shuffle
+    # partitions are only a ceiling that AQE coalesces below
+    s = get_spark("crawlers-spark-tests")
     yield s
     s.stop()

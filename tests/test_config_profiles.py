@@ -1,6 +1,6 @@
 """CrawlConfig scale profiles (r3 VERDICT hygiene): the cluster preset
 removes the sandbox foot-guns in one place; the plain constructor stays
-the sandbox profile."""
+the sandbox profile; the session sizes each stage's tasks to its data."""
 
 from __future__ import annotations
 
@@ -68,3 +68,21 @@ def test_politeness_two_phase_equals_one_shot(spark):
             map(tuple, apply_politeness(frontier, table, wave, 60.0).collect())
         )
         assert one == two, wave
+
+
+def test_session_coalesces_persisted_frames(spark):
+    """spark.sql.shuffle.partitions is a ceiling: a persisted tiny
+    aggregate materializes with at most defaultParallelism partitions,
+    so the stages downstream of a cached per-wave frame stay small."""
+    from pyspark.sql import functions as F
+
+    cores = spark.sparkContext.defaultParallelism
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(4 * cores))
+    try:
+        agg = spark.range(1000).groupBy((F.col("id") % 3).alias("k")).count().persist()
+        assert agg.count() == 3
+        assert agg.rdd.getNumPartitions() <= cores
+        agg.unpersist()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)

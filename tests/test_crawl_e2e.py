@@ -81,6 +81,15 @@ def test_full_coverage_and_parity(spark, fx, crawled):
         assert g["publication_ts"] == e["publication_ts"], url
 
 
+def test_static_side_tables_are_local_relations(crawled):
+    """The host tables broadcast into every wave are planned in the JVM
+    (LocalTableScan), not as a Python RDD that each broadcast re-runs."""
+    eng, _ = crawled
+    for table in (eng.allowed_hosts, eng.hot_hosts):
+        plan = table._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+
 def test_no_duplicate_fetches(crawled):
     """Seen-set exactness: every url fetched at most once over the run."""
     eng, _ = crawled

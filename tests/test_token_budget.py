@@ -20,11 +20,15 @@ from crawlers_spark.operators.sampling import token_budget_sample  # noqa: E402
 BUDGETS = {"en": 100, "fr": 40}
 
 
-def _docs(spark, n=60, n_parts=None):
+def _docs(spark, n=60, n_parts=None, fractional=False):
+    # fractional: quarter-token steps, so every partial sum is exact in
+    # a double and summation order cannot move a truncated prefix
     rows = [
-        (i, "en" if i % 3 else "fr", 7 + (i * 13) % 23) for i in range(n)
+        (i, "en" if i % 3 else "fr", 7 + (i * 13) % 23 + (i % 4 / 4 if fractional else 0))
+        for i in range(n)
     ]
-    df = spark.createDataFrame(rows, "doc_id long, lang string, n_tokens long")
+    typ = "double" if fractional else "long"
+    df = spark.createDataFrame(rows, f"doc_id long, lang string, n_tokens {typ}")
     return df.repartition(n_parts) if n_parts else df
 
 
@@ -53,6 +57,13 @@ def _key(df):
 
 def test_two_phase_equals_naive(spark):
     df = _docs(spark)
+    got = _key(token_budget_sample(df, "doc_id", "lang", "n_tokens", BUDGETS))
+    exp = _key(_naive(df, BUDGETS))
+    assert got == exp and len(exp) > 0
+
+
+def test_two_phase_equals_naive_fractional_tokens(spark):
+    df = _docs(spark, fractional=True)
     got = _key(token_budget_sample(df, "doc_id", "lang", "n_tokens", BUDGETS))
     exp = _key(_naive(df, BUDGETS))
     assert got == exp and len(exp) > 0
