@@ -7,8 +7,11 @@ each a declarative map of XPath/CSS selectors (`_crawl_parameters
 cleanup, and a French-month date parser. Here each site's selector
 program becomes a **vectorized regex program over a pandas Series of
 html strings** — one layout family per group of sources — executed via
-``mapInPandas`` so every Arrow batch is processed column-at-a-time
-(no per-row Python on the hot path beyond pandas' own C regex loop).
+``mapInPandas`` so every Arrow batch is processed column-at-a-time.
+pandas' object-dtype ``.str`` methods loop over the values in Python
+anyway, so the hottest kernels (literal selectors, cleanup, content
+digests) are plain comprehensions of ``str.find`` / ``str.replace`` /
+compiled-regex calls — the same loop without the per-method overhead.
 
 Parity contract (BASELINE.json input_hint): ``extracted_text`` must be
 byte-identical per url to the pinned oracle extractor
@@ -24,9 +27,11 @@ unmatched pages' html unread).
 
 from __future__ import annotations
 
+import hashlib
 import re
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -93,27 +98,39 @@ _LIT_RE = re.compile(r"^\(\?s\)([^]\[.(){}\\+*?|^$]+)\(\.\*\?\)([^]\[.(){}\\+*?|
 
 def _extract_first(html: pd.Series, pattern: str) -> pd.Series:
     """First-match group extraction; selector programs of the literal
-    form ``(?s)<open>(.*?)<close>`` run as two vectorized literal splits
-    (~6× faster than non-greedy regex over page-sized strings; exact
-    same semantics: first open, shortest to close, NaN when either
-    delimiter is absent). Anything else falls back to ``str.extract``.
+    form ``(?s)<open>(.*?)<close>`` run as two ``str.find`` calls and
+    one slice per page (same semantics as the non-greedy regex: first
+    open, shortest to close, NaN when either delimiter is absent or the
+    page is null — and unlike a ``str.split`` it never copies the page
+    tail). Anything else falls back to ``str.extract``.
     """
     m = _LIT_RE.match(pattern)
     if not m:
         return html.str.extract(pattern, expand=False)
     open_lit, close_lit = m.group(1), m.group(2)
-    part = html.str.split(open_lit, n=1, regex=False).str[1]
-    closed = part.str.split(close_lit, n=1, regex=False)
-    return closed.str[0].where(closed.str.len() > 1)
+    skip = len(open_lit)
+    out = []
+    for h in html:
+        i = h.find(open_lit) if isinstance(h, str) else -1
+        j = h.find(close_lit, i + skip) if i >= 0 else -1
+        out.append(h[i + skip : j] if j >= 0 else np.nan)
+    return pd.Series(out, index=html.index, dtype=object)
 
 
 def _clean(s: pd.Series) -> pd.Series:
-    """Vectorized whitespace collapse + entity decode (reference cleanup)."""
-    s = s.fillna("")
-    for ent, ch in _ENTITIES:
-        s = s.str.replace(ent, ch, regex=False)
-    # split()/join ≡ replace(\s+,' ')+strip, ~1.4× cheaper (regex-free)
-    return s.str.split().str.join(" ")
+    r"""Whitespace collapse + entity decode (reference cleanup), one
+    Python pass per value. The entity replacements run, in ``_ENTITIES``
+    order (so ``&amp;lt;`` still decodes to ``<``), only on values that
+    contain ``&`` — no entity can match anywhere else. ``split()``/join
+    equals ``replace(\s+, ' ')`` + strip because ``re``'s ``\s`` and
+    ``str.isspace`` accept the same 29 code points."""
+    out = []
+    for t in s.fillna(""):
+        if "&" in t:
+            for ent, ch in _ENTITIES:
+                t = t.replace(ent, ch)
+        out.append(" ".join(t.split()))
+    return pd.Series(out, index=s.index, dtype=object)
 
 
 def _parse_dates(s: pd.Series, family: int) -> pd.Series:
@@ -287,23 +304,26 @@ COMBINED_SCHEMA = (
 _META_COLS = ["url", "url_canon", "host", "host_rank", "depth", "src_source"]
 
 
+_TAG_RE = re.compile(r"<[^>]+>")
+
+
 def _content_digests(html: pd.Series) -> pd.Series:
-    """md5 of the page's *visible text* (tag-strip + whitespace
+    r"""md5 of the page's *visible text* (tag-strip + whitespace
     collapse — the same normalization as the corpus ``text`` column,
     so ``content_digest == md5(text)`` holds per url against the input
     table). Digesting text rather than raw html is what makes mirror
     traps detectable: a session-id/calendar trap mints URL variants
     whose html differs only in its self-referencing hrefs — the
-    rendered text is identical. One extra vectorized regex pass over
-    html the fused pass already holds; the md5 itself is C-speed."""
-    import hashlib
-
-    text = (
-        html.str.replace(r"<[^>]+>", " ", regex=True)
-        .str.replace(r"\s+", " ", regex=True)
-        .str.strip()
+    rendered text is identical. Per page: one compiled tag
+    substitution, then ``split()``/join — equal to ``replace(\s+, ' ')``
+    + strip, because ``re``'s ``\s`` and ``str.isspace`` accept the
+    same 29 code points — then a C-speed md5."""
+    sub = _TAG_RE.sub
+    return pd.Series(
+        [hashlib.md5(" ".join(sub(" ", h).split()).encode()).hexdigest() for h in html],
+        index=html.index,
+        dtype=object,
     )
-    return text.map(lambda t: hashlib.md5(t.encode()).hexdigest())
 
 
 def extract_page_outputs(

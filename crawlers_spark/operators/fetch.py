@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crawlers_spark.functions.canonicalize import with_canonical_url
+from crawlers_spark.session import FILE_OPEN_COST_BYTES
 
 
 def build_pages_index(
@@ -43,6 +44,19 @@ def build_pages_index(
     (small) candidate side exchanges and the html payload never crosses
     a shuffle or the driver. This is the 100 TB layout; the plain
     parquet cache is the quick path for small corpora.
+
+    The plain cache is written as one file per core, hash-partitioned
+    by ``url_canon``: a scan splits a file only at row-group boundaries,
+    and a small corpus written as one file is one row group — so the
+    map-side fetch join and the extraction fused onto it ran as ONE
+    task while the other cores read nothing. No file holds less than
+    one file open's worth of input bytes (``FILE_OPEN_COST_BYTES``, the
+    floor of Spark's own split size), so a corpus under 128 KB stays one
+    file: every extra file is an extra Python task per wave, and each
+    costs ~0.2 s before its UDF runs — on a tiny corpus's crawl waves
+    that outweighs the split. Hash rather than range partitioning:
+    ``repartitionByRange`` samples its input first, which re-runs the
+    canonicalize UDF over every url.
     """
     if buckets is not None:
         import hashlib
@@ -77,7 +91,15 @@ def build_pages_index(
     if cache_dir is not None:
         cache = Path(cache_dir) / "pages_index.parquet"
         if not cache.exists():
-            indexed.write.mode("overwrite").parquet(str(cache))
+            # the input's total file bytes, as the scan planner sees them
+            size = int(pages._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+            cores = spark.sparkContext.defaultParallelism
+            files = max(1, min(cores, -(-size // FILE_OPEN_COST_BYTES)))
+            (
+                indexed.repartition(files, "url_canon")
+                .write.mode("overwrite")
+                .parquet(str(cache))
+            )
         return spark.read.parquet(str(cache))
     return indexed
 

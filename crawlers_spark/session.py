@@ -19,6 +19,10 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+# ``spark.sql.files.openCostInBytes``: what Spark charges a scan for
+# opening one file, in bytes it could have read instead. Also the
+# smallest file the pages index is split into (operators/fetch.py).
+FILE_OPEN_COST_BYTES = 128 * 1024
 
 
 def get_spark(
@@ -65,16 +69,19 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        # html-heavy scans feed pandas-UDF extraction: smaller input
-        # splits keep every core busy (128m default → 1-2 tasks on the
-        # compressed fixture; at warehouse scale files are many and this
-        # only caps the per-task batch)
+        # caps the bytes one scan task reads (128m default). A split
+        # divides work only at parquet row-group boundaries, so this
+        # cannot spread a small file, which is one row group: what
+        # spreads the html scan over the cores is the pages index
+        # layout, up to one file per core (operators/fetch.py).
+        # At warehouse scale files are many and this only caps the
+        # per-task batch
         .config("spark.sql.files.maxPartitionBytes", "4m")
         # pack tiny state files (wave_out kind leaves, bloom shards)
         # many-per-task: the 4 MB default openCost with 4 MB partitions
         # schedules ONE task per file — a 60-file seen scan became 60+
         # tasks of pure scheduling overhead
-        .config("spark.sql.files.openCostInBytes", "131072")
+        .config("spark.sql.files.openCostInBytes", str(FILE_OPEN_COST_BYTES))
         # our joins are build-tiny/probe-huge (url keys vs html pages):
         # shuffled-hash beats sort-merge — SMJ sorts the html side per
         # task (Spark ignores bucketed sort order by default), which

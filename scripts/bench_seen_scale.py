@@ -26,6 +26,12 @@ driver-resident state; both sides live as DataFrames exactly as a
 wave does. Interleaved N/4N-core legs (same protocol as the other
 scaling probes) neutralize VM drift; efficiency = t_N / t_4N / 4.
 
+Driver memory is fixed by the FIRST session in the process: a JVM's
+heap is set when it starts, and every later leg's ``getOrCreate``
+reuses that JVM, so the legs all inherit the first leg's
+``spark.driver.memory`` (here all legs ask for the same 48g anyway).
+Only the core count and shuffle partitions really change per leg.
+
 Usage: python scripts/bench_seen_scale.py [n_urls] [n_cores] [reps]
 Prints one JSON line.
 """
@@ -85,6 +91,8 @@ def run_once(cores: int, n: int) -> dict[str, float]:
     spark = (
         SparkSession.builder.master(f"local[{cores}]")
         .config("spark.sql.shuffle.partitions", str(cores * 4))
+        # only the first session's value takes effect: later legs reuse
+        # the same driver JVM, whose heap was sized when it started
         .config("spark.driver.memory", "48g")
         .appName(f"seen-scale-{cores}")
         .getOrCreate()
