@@ -10,6 +10,11 @@ needs — about ``defaultParallelism`` tasks for a tiny crawl wave, never
 more than the ceiling for a large one. Determinism does not rest on the
 partition count: the engine fixes its outputs with total orders (sort
 keys, hash-salted ties), not by which task a row lands in.
+
+Python workers start from ``crawlers_spark.worker_daemon``, which keeps
+Spark's own archives from being re-read before every task, and the
+package root is on the workers' ``PYTHONPATH``, so they import the
+engine from any working directory.
 """
 
 from __future__ import annotations
@@ -23,6 +28,9 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # opening one file, in bytes it could have read instead. Also the
 # smallest file the pages index is split into (operators/fetch.py).
 FILE_OPEN_COST_BYTES = 128 * 1024
+# the directory holding ``crawlers_spark/``: workers need it on their
+# path to start the worker daemon and to unpickle engine UDFs
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -42,6 +50,10 @@ def get_spark(
     master = cores if isinstance(cores, str) and cores.startswith(("local", "spark://", "yarn")) else f"local[{cores}]"
     nshuffle = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
+    )
+    conf = dict(extra_conf or {})
+    worker_path = os.pathsep.join(
+        p for p in (conf.pop("spark.executorEnv.PYTHONPATH", ""), PACKAGE_ROOT) if p
     )
     b = (
         SparkSession.builder.master(master)
@@ -87,8 +99,10 @@ def get_spark(
         # task (Spark ignores bucketed sort order by default), which
         # thrashes memory at high core counts
         .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.python.daemon.module", "crawlers_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

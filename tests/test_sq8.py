@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from crawlers_spark.operators.similarity import (
     QUANT_SCALE,
+    SQ8_UDF_MAX_QUERIES,
     sq8_encode,
     sq8_stats,
     sq8_topk,
@@ -87,3 +88,12 @@ def test_udf_path_parity(spark, corpus):
         map(tuple, sq8_topk(qs, corpus, n_dims=D, k=5, use_udf=True).collect())
     )
     assert expr == udf
+
+
+def test_udf_path_bounds_query_collect(spark, corpus):
+    qs = spark.range(SQ8_UDF_MAX_QUERIES + 1).select(
+        F.col("id").alias("vec_id"),
+        F.array_repeat(F.lit(0.5).cast("float"), D).alias("embedding"),
+    )
+    with pytest.raises(ValueError, match="SQ8_UDF_MAX_QUERIES=4096.*use_udf=False"):
+        sq8_topk(qs, corpus, n_dims=D, k=3, use_udf=True)
