@@ -224,7 +224,12 @@ _META_CN_RE = re.compile(
     r'\bname\s*=\s*["\']?robots(?=["\'\s/>])',
     re.I,
 )
-_REL_NOFOLLOW_RE = re.compile(r'\brel\s*=\s*(["\'])[^"\']*\bnofollow\b[^"\']*\1', re.I)
+# one alternation per quote style, no capture group: pandas warns on
+# every str.contains over a pattern with groups
+_REL_NOFOLLOW_RE = re.compile(
+    r'\brel\s*=\s*(?:"[^"\']*\bnofollow\b[^"\']*"|\'[^"\']*\bnofollow\b[^"\']*\')',
+    re.I,
+)
 
 
 def _meta_robots_flags(html: pd.Series) -> tuple[pd.Series, pd.Series]:

@@ -283,17 +283,6 @@ class CrawlConfig:
     # html, measured in BASELINE.md). Disable only when neither
     # consumer is wanted.
     page_digests: bool = True
-    # overlap wave k's frontier/filter/lineage staging + commit with
-    # wave k+1's fetch job (run() only; run_wave() is always serial).
-    # Commits stay strictly ordered, so the committed state — and
-    # therefore resume — is bit-identical to the serial loop; the only
-    # speculative work is recomputable plans over already-staged files.
-    # Default OFF: the overlap hides staging LATENCY, which on a real
-    # deployment is object-store round-trips on the driver's critical
-    # path; on a single shared-CPU box there is no idle resource to
-    # exploit and the measured same-window A/B is ~4% in the serial
-    # loop's favor (BASELINE.md round 3). Enable on clusters.
-    pipeline_waves: bool = False
 
     @classmethod
     def cluster_profile(cls, **overrides) -> "CrawlConfig":
@@ -311,9 +300,6 @@ class CrawlConfig:
         - larger seen-filter shard geometry (10^10-key design point:
           1024 shards × 2^24 bloom bits ≈ 2 GiB of filter, ~0.4% FP at
           10^10 keys; cuckoo buckets scaled to match);
-        - ``pipeline_waves=True`` — staging latency on a cluster is
-          object-store round-trips on the driver's critical path, which
-          the overlap hides (measured rationale in BASELINE.md);
         - periodic compaction + linkrank cadence on.
 
         Any keyword overrides the profile. The plain constructor IS the
@@ -326,7 +312,6 @@ class CrawlConfig:
             bloom_bits_per_shard=1 << 24,
             bloom_hashes=5,
             cuckoo_buckets_per_shard=1 << 22,
-            pipeline_waves=True,
             compact_every=64,
         )
         base.update(overrides)
@@ -509,18 +494,15 @@ class CrawlEngine:
                 return self.spark.read.schema(shard_schema).parquet(*dirs)
         return None
 
-    def _read_wave_out(self, *kinds: str, extra_rels: tuple[str, ...] = ()) -> DataFrame:
-        """Committed wave_out rows of the given kinds (plus, in the
-        pipelined loop, ``extra_rels``: the staged-but-not-yet-committed
-        dir of the in-flight previous wave — its files are durable
-        before its manifest publishes).
+    def _read_wave_out(self, *kinds: str) -> DataFrame:
+        """Committed wave_out rows of the given kinds.
 
         Reads the ``kind=…`` hive LEAF dirs directly as one multi-path
         parquet scan — no partition discovery, no per-dir union (a
         union-of-reads grows the plan linearly with wave count; profiled
         at +3 s/wave by wave 18 on the 2k fixture).
         """
-        paths = self._kind_paths(*kinds, extra_rels=extra_rels)
+        paths = self._kind_paths(*kinds)
         if not paths:
             return self.spark.createDataFrame([], WAVE_OUT_DATA_SCHEMA)
         # explicit schema: skips driver-side footer schema inference,
@@ -528,18 +510,15 @@ class CrawlEngine:
         # at 2.2 s cold / 0.12 s warm vs 0.04 s explicit on 7 leaves)
         return self.spark.read.schema(WAVE_OUT_DATA_SCHEMA).parquet(*paths)
 
-    def _kind_paths(self, *kinds: str, extra_rels: tuple[str, ...] = ()) -> list[str]:
-        dirs = self.io.committed_dirs("wave_out") + [
-            str(self.io.root / rel) for rel in extra_rels
-        ]
+    def _kind_paths(self, *kinds: str) -> list[str]:
         return [
             str(p)
-            for d in dirs
+            for d in self.io.committed_dirs("wave_out")
             for k in kinds
             if (p := Path(d) / f"kind={k}").exists()
         ]
 
-    def _read_seen(self, extra_rels: tuple[str, ...] = ()) -> DataFrame:
+    def _read_seen(self) -> DataFrame:
         """Seen-set = every wave_out key kind (page/denied/exhausted),
         MINUS keys tombstoned by a later recrawl wave (``kind=tombstone``,
         written by ``schedule_recrawls``) that have not been refetched
@@ -553,16 +532,14 @@ class CrawlEngine:
         fast path (every crawl until the first recrawl) is a pure
         multi-path scan, unchanged from round 2.
         """
-        base = self._read_wave_out(
-            "page", "denied", "exhausted", extra_rels=extra_rels
-        ).select("url_canon", F.col("wave").alias("first_wave"))
-        if not self._kind_paths("tombstone", extra_rels=extra_rels):
+        base = self._read_wave_out("page", "denied", "exhausted").select(
+            "url_canon", F.col("wave").alias("first_wave")
+        )
+        if not self._kind_paths("tombstone"):
             return base
         from crawlers_spark.operators.recrawl import seen_after_tombstones
 
-        tombs = self._read_wave_out("tombstone", extra_rels=extra_rels).select(
-            "url_canon", "wave"
-        )
+        tombs = self._read_wave_out("tombstone").select("url_canon", "wave")
         return seen_after_tombstones(base, tombs)
 
     def _merge_frontier(self, *parts: DataFrame) -> DataFrame:
@@ -587,38 +564,14 @@ class CrawlEngine:
 
     # ---------------------------------------------------------- one wave
     def run_wave(self, wave: int) -> dict:
-        """Serial wave: plan → stage → followups → commit. Reference
-        semantics for the pipelined loop in ``run()`` (which overlaps
-        the followup staging with the NEXT wave's fetch job — committed
-        state is identical either way, asserted in e2e)."""
+        """One fetch wave: plan → the ONE synchronous wave_out job →
+        frontier', filter shards and lineage staged as concurrent
+        background jobs → one atomic commit. A zero-row committed
+        frontier quiesces (O11) without staging anything. Each
+        non-quiesced wave appends its per-segment wall clock to
+        ``wave_profile``."""
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            pending = self._start_wave(wave, pool)
-            if pending is None:
-                return {"wave": wave, "frontier": 0, "fetched": 0, "quiesced": True}
-            return self._finish_wave(pending)
-
-    def _start_wave(
-        self, wave: int, pool, carry: dict | None = None, persist_carry: bool = False
-    ) -> dict | None:
-        """Plan + run the wave's ONE synchronous job (wave_out staging),
-        then build the follow-up state plans and launch their staging
-        as background futures. Returns the pending-commit handle, or
-        None if the frontier is empty (quiesce).
-
-        ``carry`` (pipelined loop only) holds the previous wave's
-        in-memory state so this wave never waits on that wave's staging:
-        - ``frontier``: persisted next-frontier DF (its cache is
-          materialized by the staging thread we join below);
-        - ``frontier_fut`` → (rel, rowcount): joined AFTER plan build
-          (plan construction needs no count), right before the fetch
-          job launches — the quiesce check and the stats count;
-        - ``shards`` / ``shards_fut``: same pair for the seen-filter;
-        - ``seen_extra_rels``: the previous wave's staged wave_out rel —
-          its files are durable pre-commit, so the seen scan includes
-          them directly (constant plan depth; no per-wave union chain).
-        """
         cfg = self.cfg
         prof: dict = {"wave": wave, "seen_filter": self.filter_mode}
         _t = time.monotonic()
@@ -629,18 +582,13 @@ class CrawlEngine:
             prof[seg] = round(now - _t, 3)
             _t = now
 
-        seen_extra = tuple(carry["seen_extra_rels"]) if carry else ()
-        if carry is None:
-            n_frontier = self._rowcount(self._frontier_rels())
-            _lap("frontier_footers")
-            if n_frontier == 0:
-                return None
-            frontier = self._read_frontier().persist()
-            shards = self._read_filter(wave)
-        else:
-            frontier = carry["frontier"]
-            shards = carry["shards"]
-        seen = self._read_seen(extra_rels=seen_extra)
+        n_frontier = self._rowcount(self._frontier_rels())
+        _lap("frontier_footers")
+        if n_frontier == 0:
+            return {"wave": wave, "frontier": 0, "fetched": 0, "quiesced": True}
+        frontier = self._read_frontier().persist()
+        shards = self._read_filter(wave)
+        seen = self._read_seen()
 
         # O6 politeness → O2/O17 salted deterministic top-k
         gated = apply_politeness(frontier, self._p_budget, wave, cfg.wave_interval_s)
@@ -741,23 +689,6 @@ class CrawlEngine:
             .repartition(F.col("kind"))
         )
         _lap("plan_build")
-        if carry is not None:
-            # join the previous wave's frontier AND filter staging here,
-            # after plan build (which needs no rowcount) and before the
-            # fetch job: the frontier footer count is this wave's
-            # quiesce check, and the job below then reads fully
-            # materialized caches instead of racing the staging threads
-            # for them partition-lock by partition-lock (the r2 lesson:
-            # a job probing a cache mid-materialization blocks task
-            # slots on per-partition cache locks).
-            frontier_rel, n_frontier = carry["frontier_fut"].result()
-            if carry.get("shards_fut") is not None:
-                carry["shards_rel"] = carry["shards_fut"].result()[0]
-            _lap("frontier_footers")
-            if n_frontier == 0:
-                return None
-        else:
-            frontier_rel = None
         rel_out = self._stage(wave_out_df, "wave_out", wave, compact="none", partition_by="kind")
         _lap("stage_wave_out")
         wo = self.spark.read.schema(WAVE_OUT_SCHEMA).parquet(str(self.io.root / rel_out))
@@ -775,9 +706,7 @@ class CrawlEngine:
             # since both inputs are committed/staged state)
             from crawlers_spark.operators.dedup import content_seen_winners
 
-            prior = self._read_wave_out("page", extra_rels=seen_extra).select(
-                "content_digest"
-            )
+            prior = self._read_wave_out("page").select("content_digest")
             winners = content_seen_winners(
                 pages_meta.select("url", "url_canon", "content_digest"), prior
             )
@@ -866,30 +795,11 @@ class CrawlEngine:
                 )
         discovered = discovered.persist()
 
-        # Follow-up plans root at DISK copies (the staged rels when
-        # carried, the committed snapshot otherwise): every wave's
-        # frontier'/filter' plan is a constant-depth tree over parquet
-        # scans, so arbitrarily long pipelined crawls never grow the
-        # logical plan (an in-memory chain would add one merge per wave
-        # and stall the driver by wave ~100). The fetch job above used
-        # the in-memory cache of the SAME rows, so results are
-        # identical.
-        if frontier_rel is not None:
-            frontier_disk = self.spark.read.schema(FRONTIER_SCHEMA).parquet(
-                str(self.io.root / frontier_rel)
-            )
-        else:
-            frontier_disk = self._read_frontier()
-        shards_disk = shards
-        if carry is not None and carry.get("shards_rel") is not None:
-            shards_disk = self._read_filter_rel(carry["shards_rel"])
-        _lap("followup_shards_join")
-
         # frontier' = (old − attempted/denied) ∪ retryable misses ∪ new links
         attempted_keys = selected.select("url_canon")
-        remaining = frontier_disk.join(attempted_keys, "url_canon", "left_anti")
+        remaining = frontier.join(attempted_keys, "url_canon", "left_anti")
         fresh_links = (
-            self.filter.filter_unseen(discovered, shards_disk, seen)
+            self.filter.filter_unseen(discovered, shards, seen)
             .join(fetched_keys, "url_canon", "left_anti")
         )
         next_frontier = self._merge_frontier(remaining, retryable, fresh_links)
@@ -907,239 +817,110 @@ class CrawlEngine:
         # bloom OR-merge or cuckoo insert, same unified contract
         filter_merged = None
         if self.filter_table is not None:
-            filter_merged = self.filter.update(shards_disk, seen_delta, wave)
-
-        if persist_carry:
-            # pipelined loop: the next wave's fetch job consumes these
-            # from cache (materialized by the staging threads below).
-            # frontier' must be a LAZY localCheckpoint, not a plain
-            # persist: its merge embeds THIS wave's whole fetch chain
-            # (selected → unseen → retryable), which embeds the carried
-            # frontier — without plan truncation the embedded tree
-            # multiplies every wave (observed: a 2 GB plan string by
-            # wave ~8). Durability still comes from the staged parquet
-            # write below; the checkpoint only backs the next wave's
-            # in-memory read, and a lost block fails loudly → the rerun
-            # resumes from the last committed manifest. filter_merged
-            # is already disk-rooted (shards_disk + staged wave_out), so
-            # a plain persist suffices.
-            next_frontier = next_frontier.localCheckpoint(eager=False)
-            if filter_merged is not None:
-                filter_merged = filter_merged.persist()
+            filter_merged = self.filter.update(shards, seen_delta, wave)
 
         # staging is the wave's serial floor: ONE wave_out write above
         # ran the whole chain; frontier', the filter shards, and lineage
         # now stage as CONCURRENT background jobs that only touch small
         # state (staged wave_out rows, persisted key-only frames) —
-        # joined in _finish_wave just before this wave's commit. In the
-        # pipelined loop the NEXT wave's fetch job overlaps them.
-        # Per-kind wave_out footer rowcounts ARE the wave's extracted/
-        # fetched metrics — no count() jobs anywhere.
-        futs = {"frontier": self._launch_stage(pool, next_frontier, "frontier", wave)}
-        if filter_merged is not None:
-            futs[self.filter_table] = self._launch_stage(
-                pool, filter_merged, self.filter_table, wave
+        # joined just before this wave's commit. Per-kind wave_out
+        # footer rowcounts ARE the wave's extracted/fetched metrics —
+        # no count() jobs anywhere.
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            futs = {"frontier": pool.submit(self._stage, next_frontier, "frontier", wave, "none")}
+            if filter_merged is not None:
+                futs[self.filter_table] = pool.submit(
+                    self._stage, filter_merged, self.filter_table, wave, "none"
+                )
+            _lap("followup_build")
+            n_offers = self._rowcount([rel_out], sub="kind=offer")
+            n_fetched = self._rowcount([rel_out], sub="kind=page")
+            n_redirects = (
+                self._rowcount([rel_out], sub="kind=redirect") if redirect_col else 0
             )
-        _lap("followup_build")
-        n_offers = self._rowcount([rel_out], sub="kind=offer")
-        n_fetched = self._rowcount([rel_out], sub="kind=page")
-        n_redirects = (
-            self._rowcount([rel_out], sub="kind=redirect") if redirect_col else 0
-        )
-        _lap("out_footers")
+            _lap("out_footers")
 
-        # O15 per-partition lineage (needs the n_offers footer read)
-        lineage = (
-            pages_meta.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("fetched"))
-            .withColumn("wave", F.lit(wave).cast("long"))
-            .withColumn("extracted", F.lit(n_offers).cast("long"))
-            .withColumn("bloom_version", F.lit(wave if self.filter_table else -1).cast("long"))
-            .select("wave", "partition_id", "fetched", "extracted", "bloom_version")
-        )
-        futs["lineage"] = self._launch_stage(pool, lineage, "lineage", wave)
-        _lap("followup_launch")
-
-        return {
-            "wave": wave,
-            "rel_out": rel_out,
-            "futs": futs,
-            "prof": prof,
-            "next_frontier": next_frontier,
-            "filter_merged": filter_merged,
-            "meta": {
+            # O15 per-partition lineage (needs the n_offers footer read)
+            lineage = (
+                pages_meta.groupBy(F.spark_partition_id().alias("partition_id"))
+                .agg(F.count("*").alias("fetched"))
+                .withColumn("wave", F.lit(wave).cast("long"))
+                .withColumn("extracted", F.lit(n_offers).cast("long"))
+                .withColumn("bloom_version", F.lit(wave if self.filter_table else -1).cast("long"))
+                .select("wave", "partition_id", "fetched", "extracted", "bloom_version")
+            )
+            futs["lineage"] = pool.submit(self._stage, lineage, "lineage", wave, "none")
+            _lap("followup_launch")
+            staged = {"wave_out": [rel_out]}
+            for table, fut in futs.items():
+                staged[table] = [fut.result()]
+        _lap("stage_frontier_filter")
+        self.io.commit_wave(
+            wave,
+            staged,
+            {
                 "frontier_in": n_frontier, "fetched": n_fetched,
                 "offers": n_offers, "redirects": n_redirects,
                 "seen_filter": self.filter_mode,
             },
-            "stats": {
-                "wave": wave, "frontier": n_frontier, "fetched": n_fetched,
-                "offers": n_offers, "redirects": n_redirects, "quiesced": False,
-            },
-            # safe to release once this wave's futures are joined: the
-            # fetch job is done and every follow-up plan roots at disk
-            "unpersist": [
-                df for df in (frontier, selected, flagged, unseen, discovered, shards)
-                if df is not None
-            ],
-        }
-
-    def _launch_stage(self, pool, df: DataFrame, table: str, wave: int):
-        """Stage ``df`` in a worker thread; the future resolves to
-        (rel path, footer rowcount) — the count is free off the written
-        files and is the next wave's quiesce check for the frontier."""
-
-        def _job() -> tuple[str, int]:
-            rel = self._stage(df, table, wave, "none")
-            return rel, self._rowcount([rel])
-
-        return pool.submit(_job)
-
-    def _read_filter_rel(self, rel: str) -> DataFrame:
-        """Read one staged (possibly not-yet-committed) filter-shard rel
-        with the mode's explicit schema."""
-        from crawlers_spark.operators.dedup import BLOOM_SCHEMA, CUCKOO_SCHEMA
-
-        shard_schema = CUCKOO_SCHEMA if self.filter_mode == "cuckoo" else BLOOM_SCHEMA
-        return self.spark.read.schema(shard_schema).parquet(str(self.io.root / rel))
-
-    def _finish_wave(self, pending: dict) -> dict:
-        """Join the wave's staging futures, commit atomically, release
-        caches. In the serial path this runs immediately after
-        _start_wave; in the pipelined loop it runs after the NEXT wave's
-        fetch job, so the futures have long resolved and commit order is
-        still strictly by wave number."""
-        prof = pending["prof"]
-        _t = time.monotonic()
-
-        def _lap(seg: str) -> None:
-            nonlocal _t
-            now = time.monotonic()
-            prof[seg] = round(now - _t, 3)
-            _t = now
-
-        staged: dict[str, list[str]] = {"wave_out": [pending["rel_out"]]}
-        for table, fut in pending["futs"].items():
-            rel, _n = fut.result()
-            staged[table] = [rel]
-        _lap("stage_frontier_filter")
-        self.io.commit_wave(pending["wave"], staged, pending["meta"])
+        )
         _lap("commit")
-        for df in pending["unpersist"]:
-            df.unpersist()
+        for df in (frontier, selected, flagged, unseen, discovered, shards):
+            if df is not None:
+                df.unpersist()
         _lap("unpersist")
-        prof["fetched"] = pending["meta"]["fetched"]
+        prof["fetched"] = n_fetched
         self.wave_profile.append(prof)
-        return pending["stats"]
+        return {
+            "wave": wave, "frontier": n_frontier, "fetched": n_fetched,
+            "offers": n_offers, "redirects": n_redirects, "quiesced": False,
+        }
 
     # ------------------------------------------------------------- driver
     def run(self, max_waves: int = 50) -> list[dict]:
         """Run waves until quiesce (O11) or max_waves; resume-safe (O16).
 
-        With ``cfg.pipeline_waves`` enabled (OFF by default — see the
-        CrawlConfig comment and the BASELINE.md A/B), wave k's follow-up
-        staging — frontier', filter shards, lineage, all small state
-        over already-staged files, running while politeness-bounded
-        waves leave most executor cores idle — overlaps wave k+1's plan
-        build and fetch job. Wave k commits after k+1's fetch job
-        returns and always before k+1's own commit, so the committed
-        manifest sequence (and therefore kill/resume behavior) is
-        bit-identical to the serial loop; the only in-flight extras are
-        uncommitted staged dirs, which resume never reads. Maintenance
-        (linkrank, compaction) drains the pipeline first so it always
-        sees committed state.
+        Each slot is one committed wave: a maintenance wave when its
+        cadence hits (linkrank, trap gate), else a fetch wave
+        (``run_wave``), with compaction after every ``compact_every``-th
+        fetch wave. A kill between a wave's staging and its commit
+        leaves only uncommitted staged dirs, which resume never reads.
         """
-        from concurrent.futures import ThreadPoolExecutor
-
         self.bootstrap()
         stats: list[dict] = []
-
-        if not self.cfg.pipeline_waves:
-            while True:
-                wave = self.io.last_committed_wave() + 1
-                if wave > max_waves:
-                    break
-                # linkrank cadence is a pure function of the COMMITTED
-                # wave number (every (k+1)th wave slot is a linkrank
-                # maintenance wave), so an interrupted run resumes onto
-                # the exact same fetch/maintenance schedule. A no-op
-                # application (no link rows yet) commits nothing and
-                # falls through to fetching the same wave number.
-                if (
-                    self.cfg.linkrank_every
-                    and wave % (self.cfg.linkrank_every + 1) == 0
-                    and self.apply_linkrank()["wave"] is not None
-                ):
-                    continue
-                # trap-gate cadence: same committed-wave-number contract
-                # as linkrank (resume lands on the identical schedule);
-                # when both cadences hit the same slot, linkrank commits
-                # first and the trap check re-evaluates at the bumped
-                # wave number — deterministic either way.
-                if (
-                    self.cfg.trap_check_every
-                    and wave % (self.cfg.trap_check_every + 1) == 0
-                    and self.apply_trap_gate()["wave"] is not None
-                ):
-                    continue
-                st = self.run_wave(wave)
-                stats.append(st)
-                if st["quiesced"]:
-                    break
-                if self.cfg.compact_every and wave % self.cfg.compact_every == 0:
-                    self.compact()
-            return stats
-
-        pending: dict | None = None
-        carry: dict | None = None
-
-        def _drain() -> None:
-            nonlocal pending, carry
-            if pending is not None:
-                stats.append(self._finish_wave(pending))
-                pending = None
-            if carry is not None:
-                for key in ("frontier", "shards"):
-                    if carry.get(key) is not None:
-                        carry[key].unpersist()
-                carry = None
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            while True:
-                wave = (pending["wave"] if pending else self.io.last_committed_wave()) + 1
-                if wave > max_waves:
-                    break
-                # maintenance slots drain first (same cadence semantics
-                # as the serial loop — see its comment)
-                if self.cfg.linkrank_every and wave % (self.cfg.linkrank_every + 1) == 0:
-                    _drain()
-                    if self.apply_linkrank()["wave"] is not None:
-                        continue
-                if self.cfg.trap_check_every and wave % (self.cfg.trap_check_every + 1) == 0:
-                    _drain()
-                    if self.apply_trap_gate()["wave"] is not None:
-                        continue
-                cur = self._start_wave(wave, pool, carry=carry, persist_carry=True)
-                if cur is None:
-                    _drain()
-                    stats.append({"wave": wave, "frontier": 0, "fetched": 0, "quiesced": True})
-                    return stats
-                # wave-1 commits here — after this wave's fetch job, but
-                # strictly before this wave's own commit
-                if pending is not None:
-                    stats.append(self._finish_wave(pending))
-                pending = cur
-                carry = {
-                    "frontier": cur["next_frontier"],
-                    "frontier_fut": cur["futs"]["frontier"],
-                    "shards": cur["filter_merged"],
-                    "shards_fut": cur["futs"].get(self.filter_table),
-                    "seen_extra_rels": [cur["rel_out"]],
-                }
-                if self.cfg.compact_every and wave % self.cfg.compact_every == 0:
-                    _drain()
-                    self.compact()
-            _drain()
+        while True:
+            wave = self.io.last_committed_wave() + 1
+            if wave > max_waves:
+                break
+            # linkrank cadence is a pure function of the COMMITTED
+            # wave number (every (k+1)th wave slot is a linkrank
+            # maintenance wave), so an interrupted run resumes onto
+            # the exact same fetch/maintenance schedule. A no-op
+            # application (no link rows yet) commits nothing and
+            # falls through to fetching the same wave number.
+            if (
+                self.cfg.linkrank_every
+                and wave % (self.cfg.linkrank_every + 1) == 0
+                and self.apply_linkrank()["wave"] is not None
+            ):
+                continue
+            # trap-gate cadence: same committed-wave-number contract
+            # as linkrank (resume lands on the identical schedule);
+            # when both cadences hit the same slot, linkrank commits
+            # first and the trap check re-evaluates at the bumped
+            # wave number — deterministic either way.
+            if (
+                self.cfg.trap_check_every
+                and wave % (self.cfg.trap_check_every + 1) == 0
+                and self.apply_trap_gate()["wave"] is not None
+            ):
+                continue
+            st = self.run_wave(wave)
+            stats.append(st)
+            if st["quiesced"]:
+                break
+            if self.cfg.compact_every and wave % self.cfg.compact_every == 0:
+                self.compact()
         return stats
 
     # --------------------------------------------------------- recrawl

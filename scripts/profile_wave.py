@@ -4,17 +4,17 @@ Runs the standard e2e crawl and aggregates ``CrawlEngine.wave_profile``
 — the per-segment wall clock recorded inside ``run_wave`` — to show
 WHERE the ~5 s/wave driver barrier goes:
 
-  frontier_footers      frontier rowcount (footers, or the carried
-                        staging future's join in the pipelined loop)
+  frontier_footers      frontier rowcount from parquet footers (the
+                        quiesce check)
   plan_build            driver-side DataFrame/plan construction (lazy)
   stage_wave_out        THE wave job: select→robots→dedup→fetch→extract
                         → one kind-partitioned write
-  followup_shards_join  pipelined only: previous filter-staging join
-  followup_build        frontier'/filter'/lineage plan construction
+  followup_build        link discovery and frontier'/filter' plan
+                        construction, then submitting their staging
   out_footers           per-kind footer rowcounts (no Spark job)
-  followup_launch       submitting the staging futures
-  stage_frontier_filter joining the staging futures (≈0 when pipelined:
-                        they resolved during the next wave's fetch)
+  followup_launch       lineage plan + submitting its staging
+  stage_frontier_filter joining the frontier', filter and lineage
+                        staging jobs
   commit                manifest fsync (driver fs only)
   unpersist             cache cleanup
 
@@ -37,9 +37,8 @@ sys.path.insert(0, str(REPO))
 
 SEGMENTS = [
     "frontier_footers", "plan_build", "stage_wave_out",
-    "followup_shards_join", "followup_build", "out_footers",
-    "followup_launch", "stage_frontier_filter",
-    "stage_lineage", "commit", "unpersist",
+    "followup_build", "out_footers", "followup_launch",
+    "stage_frontier_filter", "commit", "unpersist",
 ]
 
 
@@ -50,7 +49,7 @@ def main() -> int:
     from crawlers_spark.session import get_spark
     from scripts.run_crawl import run_crawl
 
-    spark = get_spark(f"local[{cores}]")
+    spark = get_spark("profile-wave", cores=cores)
     state = Path(tempfile.mkdtemp(prefix="profile_wave_"))
     try:
         out, _stats, eng = run_crawl(pages, cores, state, spark=spark)

@@ -7,7 +7,6 @@ Also the work-horse for the scaling bench (local[8] vs local[32]).
 from __future__ import annotations
 
 import json
-import os
 import shutil
 import sys
 import time
@@ -40,9 +39,6 @@ def run_crawl(n_pages: int, cores: int, state_dir: Path, max_waves: int = 60, sp
         state_dir,
         CrawlConfig(
             hot_hosts={"src0.example": 4, "src1.example": 4},
-            # SPARK_GRAFT_PIPELINE=1 switches to the pipelined wave
-            # loop — the serial-vs-pipelined A/B lever for BASELINE.md
-            pipeline_waves=bool(os.environ.get("SPARK_GRAFT_PIPELINE")),
         ),
     )
     t0 = time.perf_counter()

@@ -4,13 +4,14 @@ the sandbox profile; the session sizes each stage's tasks to its data."""
 
 from __future__ import annotations
 
+import pytest
+
 from crawlers_spark.plans.wave import CrawlConfig
 
 
 def test_cluster_profile_removes_sandbox_footguns():
     c = CrawlConfig.cluster_profile()
     assert c.output_coalesce is None  # no hot-path coalesce at TB scale
-    assert c.pipeline_waves is True
     assert c.compact_every is not None
     # 10^10-key seen-filter geometry: ~2 GiB of bloom bits total
     assert c.bloom_shards * c.bloom_bits_per_shard >= 10**10
@@ -22,16 +23,18 @@ def test_cluster_profile_removes_sandbox_footguns():
 def test_sandbox_defaults_unchanged():
     c = CrawlConfig()
     assert c.output_coalesce == 4
-    assert c.pipeline_waves is False
     assert c.seen_filter == "none"  # exact anti-join only: fastest on one box
 
 
 def test_overrides_win():
-    c = CrawlConfig.cluster_profile(pipeline_waves=False, bloom_shards=7, seen_filter="cuckoo")
-    assert c.pipeline_waves is False and c.bloom_shards == 7
+    c = CrawlConfig.cluster_profile(bloom_shards=7, seen_filter="cuckoo")
+    assert c.bloom_shards == 7
     assert c.seen_filter == "cuckoo"
     assert CrawlConfig.cluster_profile(seen_filter="none").seen_filter == "none"
     assert c.output_coalesce is None  # untouched profile values stay
+    # a removed option fails loudly instead of being ignored
+    with pytest.raises(TypeError):
+        CrawlConfig.cluster_profile(pipeline_waves=True)
 
 
 def test_politeness_two_phase_equals_one_shot(spark):

@@ -297,55 +297,51 @@ def test_adaptive_hot_host_salting_identical_output(spark, fx, crawled):
     )
 
 
-def test_pipelined_equals_serial(spark, fx, crawled):
-    """The pipelined loop ≡ the serial loop (default): identical
-    per-wave stats, wave log, and offers — the staging/fetch overlap
-    must be invisible in committed state. Runs with the Bloom filter,
-    as cluster_profile() pairs them, so the carried shards are used."""
-    eng1, stats1 = crawled  # serial default
-    ser = make_engine(spark, fx, "pipelined_ab", pipeline_waves=True, seen_filter="bloom")
-    stats2 = ser.run(max_waves=40)
-    key = lambda s: (s["wave"], s["frontier"], s["fetched"], s.get("offers", 0), s["quiesced"])  # noqa: E731
-    assert [key(s) for s in stats1] == [key(s) for s in stats2]
-    assert sorted(map(tuple, ser.wave_log().collect())) == sorted(
-        map(tuple, eng1.wave_log().collect())
-    )
-    assert sorted(r["url"] for r in ser.offers().select("url").collect()) == sorted(
-        r["url"] for r in eng1.offers().select("url").collect()
-    )
-
-
-def test_kill_mid_pipeline_resume(spark, fx, crawled):
-    """Abandon a pipelined run BETWEEN wave 2's staging and its commit
-    (the new in-flight window the overlap creates): a fresh engine
-    resumes from the last committed manifest — wave 2's orphaned staged
-    dirs are never read — and converges to the identical crawl."""
-    from concurrent.futures import ThreadPoolExecutor
-
+@pytest.mark.parametrize("where", ["frontier_stage", "commit"])
+def test_crash_before_commit(spark, fx, crawled, monkeypatch, where):
+    """Wave 2 dies after its wave_out job but before its manifest
+    publishes: in the frontier' staging thread, or in the commit
+    itself. Wave 1 stays the last committed wave, wave 2's staged dirs
+    are left behind, and a fresh engine resumes from the manifests
+    alone (it never reads an uncommitted dir) to the uninterrupted
+    crawl."""
     eng1, _ = crawled
-    part = make_engine(spark, fx, "pipekill", seen_filter="bloom")
-    part.bootstrap()
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        p1 = part._start_wave(1, pool, persist_carry=True)
-        carry = {
-            "frontier": p1["next_frontier"],
-            "frontier_fut": p1["futs"]["frontier"],
-            "shards": p1["filter_merged"],
-            "shards_fut": p1["futs"].get(part.filter_table),
-            "seen_extra_rels": [p1["rel_out"]],
-        }
-        p2 = part._start_wave(2, pool, carry=carry, persist_carry=True)
-        assert p2 is not None
-        part._finish_wave(p1)  # wave 1 commits; wave 2 staged, NEVER committed
+    part = make_engine(spark, fx, f"crash_{where}")
+    part.run(max_waves=1)
+
+    def fail(*_a, **_kw):
+        raise RuntimeError("injected crash")
+
+    if where == "frontier_stage":
+        stage = part._stage
+
+        def stage_or_fail(df, table, wave, *a, **kw):
+            return (fail if table == "frontier" else stage)(df, table, wave, *a, **kw)
+
+        monkeypatch.setattr(part, "_stage", stage_or_fail)
+        staged = {"wave_out", "lineage"}
+    else:
+        monkeypatch.setattr(part.io, "commit_wave", fail)
+        staged = {"wave_out", "frontier", "lineage"}
+    with pytest.raises(RuntimeError, match="injected crash"):
+        part.run(max_waves=40)
     assert part.io.last_committed_wave() == 1
-    for df in p2["unpersist"] + [p2["next_frontier"], p2["filter_merged"]]:
-        if df is not None:
-            df.unpersist()
-    resumed = resume_engine(spark, fx, "pipekill", seen_filter="bloom")
+    assert {p.parts[-3] for p in part.io.root.glob("*/data/w000002-*")} == staged
+
+    resumed = resume_engine(spark, fx, f"crash_{where}")
     resumed.run(max_waves=40)
-    assert sorted(map(tuple, resumed.wave_log().collect())) == sorted(
-        map(tuple, eng1.wave_log().collect())
-    )
-    assert sorted(r["url"] for r in resumed.offers().select("url").collect()) == sorted(
-        r["url"] for r in eng1.offers().select("url").collect()
-    )
+    for read in ("wave_log", "offers", "seen"):
+        assert sorted(map(tuple, getattr(resumed, read)().collect())) == sorted(
+            map(tuple, getattr(eng1, read)().collect())
+        ), read
+
+
+def test_profile_wave_segments(crawled):
+    """scripts/profile_wave.py aggregates exactly the segments every
+    fetch wave records in ``wave_profile``."""
+    from scripts.profile_wave import SEGMENTS
+
+    eng, _ = crawled
+    assert eng.wave_profile
+    for prof in eng.wave_profile:
+        assert SEGMENTS == [k for k in prof if k not in ("wave", "seen_filter", "fetched")]

@@ -173,3 +173,49 @@ def test_rel_nofollow_variants():
     )
     out = pd.concat(list(_outlink_batches(iter([pdf]), drop_nofollow=True)))
     assert sorted(out["out_url"]) == ["https://h1/c", "https://h1/d"]
+
+
+def test_rel_nofollow_pattern_without_groups():
+    """The group-free rel=nofollow pattern matches exactly what the
+    earlier back-reference form did (one quote group closed by ``\\1``),
+    and filtering a batch with it raises no pandas warning."""
+    import warnings
+
+    import pandas as pd
+
+    from crawlers_spark.extraction.extractors import _REL_NOFOLLOW_RE, _outlink_batches
+
+    backref = re.compile(r'\brel\s*=\s*(["\'])[^"\']*\bnofollow\b[^"\']*\1', re.I)
+    variants = {
+        'rel="nofollow"': True,
+        "rel='nofollow'": True,
+        'REL = "NoFollow"': True,
+        'rel="ugc nofollow"': True,
+        "rel='nofollow noopener'": True,
+        'rel="me nofollow ugc"': True,
+        "rel=\"nofollow'": False,
+        "rel='nofollow\"": False,
+        'rel="nofollowx"': False,
+        'rel="xnofollow"': False,
+        "rel=nofollow": False,
+        'rel="me"': False,
+        'rel=""': False,
+        "rel='me' title=\"nofollow\"": False,
+    }
+    for attrs, want in variants.items():
+        got = bool(_REL_NOFOLLOW_RE.search(f' href="/x" {attrs}'))
+        assert got == bool(backref.search(f' href="/x" {attrs}')) == want, attrs
+
+    pdf = pd.DataFrame(
+        {
+            "url": ["https://h1/x"],
+            "src_source": ["src0"],
+            "depth": [0],
+            "html": ["".join(f'<a href="/{i}" {a}>{i}</a>' for i, a in enumerate(variants))],
+        }
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        out = pd.concat(list(_outlink_batches(iter([pdf]), drop_nofollow=True)))
+    kept = [f"https://h1/{i}" for i, want in enumerate(variants.values()) if not want]
+    assert sorted(out["out_url"]) == sorted(kept)
