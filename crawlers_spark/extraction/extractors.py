@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from crawlers_spark.functions.canonicalize import canonicalize_series
+
 # mirror of the oracle's entity set — fixture contract (FIXTURES.md B1)
 _ENTITIES = [
     ("&amp;", "&"), ("&lt;", "<"), ("&gt;", ">"),
@@ -301,9 +303,9 @@ def extract_outlinks(fetched: DataFrame) -> DataFrame:
 
 COMBINED_SCHEMA = (
     "kind string, url string, url_canon string, host string, host_rank int, "
-    "depth int, src_source string, out_url string, anchor string, title string, company string, "
-    "location string, salary string, description string, publication_ts timestamp, "
-    "extracted_text string, content_digest string"
+    "depth int, src_source string, out_url string, out_canon string, anchor string, "
+    "title string, company string, location string, salary string, description string, "
+    "publication_ts timestamp, extracted_text string, content_digest string"
 )
 
 _META_COLS = ["url", "url_canon", "host", "host_rank", "depth", "src_source"]
@@ -348,13 +350,24 @@ def extract_page_outputs(
       wave_log / seen-delta / lineage),
     - ``'offer'`` — extracted job offer for detail pages matching
       ``detail_pattern`` (url = canonical url, the offer identity),
-    - ``'link'``  — one row per outlink (feeds frontier growth),
+    - ``'link'``  — one row per outlink (feeds frontier growth and the
+      link-graph readers): the source page's ``url``, ``url_canon``,
+      ``src_source`` and ``depth``, the raw target ``out_url``
+      (root-relative hrefs resolved), its canonical form ``out_canon``
+      and the ``anchor`` text,
     - ``'redirect'`` (only with ``redirect_col``) — one row per fetched
-      3xx page, ``out_url`` = its Location target. Redirect pages still
-      emit their ``'page'`` row (they are fetched → seen) but no offers
-      or outlinks; the wave loop re-enqueues the target through the
-      normal frontier path (canonicalize → offsite → depth → seen →
+      3xx page: the page's meta columns, ``out_url`` = its Location
+      target and ``out_canon`` = that target canonicalized. Redirect
+      pages still emit their ``'page'`` row (they are fetched → seen)
+      but no offers or outlinks; the wave loop re-enqueues the target
+      through the normal frontier path (offsite → depth → seen →
       robots → politeness), Scrapy-RedirectMiddleware style.
+
+    Both ends of every link and redirect are canonical when the row is
+    written: ``url_canon`` is copied from the fetched page and
+    ``out_canon`` is ``canonicalize_series(out_url)`` (the function
+    behind ``canonicalize_udf``), so no reader crosses into Python to
+    canonicalize a link again.
 
     Rationale (the 100 TB shape): offers and outlinks both need the
     page html, and html is the single biggest column in the pipeline.
@@ -427,9 +440,12 @@ def extract_page_outputs(
                 is_redirect = pdf[redirect_col].notna()
                 if is_redirect.any():
                     rows = pdf[is_redirect]
+                    target = rows[redirect_col]
                     yield _shape(
                         "redirect",
-                        rows[_META_COLS].assign(out_url=rows[redirect_col].values),
+                        rows[_META_COLS].assign(
+                            out_url=target.values, out_canon=canonicalize_series(target).values
+                        ),
                     )
                     pdf = pdf[~is_redirect]
                     if pdf.empty:
@@ -457,7 +473,13 @@ def extract_page_outputs(
                 for family, sub in detail.groupby(fam):
                     off = _extract_family(sub.assign(url=sub["url_canon"]), int(family))
                     yield _shape("offer", off.rename(columns={"source": "src_source"}))
+            # both ends of a link are canonical from here on: the source
+            # page's url_canon rides along (a page's raw url determines
+            # it), the target is canonicalized once, here
+            src_canon = dict(zip(link_src["url"], link_src["url_canon"]))
             for links in _outlink_batches(iter([link_src]), drop_nofollow=meta_robots):
+                links["url_canon"] = links["url"].map(src_canon)
+                links["out_canon"] = canonicalize_series(links["out_url"])
                 yield _shape("link", links)
 
     # missing meta columns fall back to a typed NULL matching the

@@ -174,8 +174,9 @@ class CrawlConfig:
     # longest-match-wins — Scrapy/Protego parity for modern robots.txt)
     robots_mode: str = "stdlib"
     # follow 3xx redirects (corpus rows with a non-null `redirect_to`):
-    # the Location target re-enters the frontier as a normal candidate
-    # (canonicalize → offsite → depth+1 → seen → robots → politeness),
+    # the Location target (canonicalized by the extraction pass) re-enters
+    # the frontier as a normal candidate (offsite → depth+1 → seen →
+    # robots → politeness),
     # so redirects to slow hosts still honor that host's budget and
     # cycles terminate via the seen set — Scrapy RedirectMiddleware
     # semantics with the per-request hop cap mapped onto the depth bound
@@ -278,11 +279,6 @@ class CrawlConfig:
     # frontier. Off by default: it changes crawl semantics (mirrored
     # subtrees are reached via one mirror only).
     content_seen: bool = False
-    # per-page content digests in the fused pass (feeds trap detection
-    # + content-seen; ~the cost of one more vectorized regex pass over
-    # html, measured in BASELINE.md). Disable only when neither
-    # consumer is wanted.
-    page_digests: bool = True
 
     @classmethod
     def cluster_profile(cls, **overrides) -> "CrawlConfig":
@@ -421,25 +417,20 @@ class CrawlEngine:
         df: DataFrame,
         table: str,
         wave: int,
-        compact: str = "repartition",
+        compact: str,
         partition_by: str | None = None,
     ) -> str:
         """Stage with small-file compaction (``output_coalesce``):
 
-        - ``"repartition"`` — full exchange of the (small) output rows;
-          right when upstream must still run at full parallelism (the
-          wave_log materializer: collapsing it would collapse the
-          pandas-UDF extraction itself to 4 tasks);
-        - ``"coalesce"``    — zero-exchange narrow compaction; right
-          when upstream is already materialized in the cache (offers);
-        - ``"none"``        — plan already ends in a shuffle, AQE's
+        - ``"coalesce"`` — zero-exchange narrow compaction to
+          ``output_coalesce`` files; right when the plan does not end in
+          a shuffle (the OPIC state, the trap-host table);
+        - ``"none"``     — plan already ends in a shuffle, AQE's
           coalescePartitions bounds the file count for free (frontier
-          agg, seen dropDuplicates, bloom shard agg).
+          agg, wave_out kind exchange, filter shard agg).
         """
         n = self.cfg.output_coalesce
-        if n is not None and compact == "repartition":
-            df = df.repartition(n)
-        elif n is not None and compact == "coalesce":
+        if n is not None and compact == "coalesce":
             df = df.coalesce(n)
         return self.io.stage(df, table, wave, partition_by=partition_by)
 
@@ -541,6 +532,15 @@ class CrawlEngine:
 
         tombs = self._read_wave_out("tombstone").select("url_canon", "wave")
         return seen_after_tombstones(base, tombs)
+
+    def _link_edges(self, *extra: str) -> DataFrame:
+        """(src_canon, dst_canon, *extra) of every committed link row —
+        the crawled link graph. Both ends were canonicalized once, by
+        the extraction pass that wrote the row, so this is a pure
+        column projection of the link scan."""
+        return self._read_wave_out("link").select(
+            F.col("url_canon").alias("src_canon"), F.col("out_canon").alias("dst_canon"), *extra
+        )
 
     def _merge_frontier(self, *parts: DataFrame) -> DataFrame:
         """Union frontier-shaped inputs and collapse per url_canon with
@@ -645,10 +645,6 @@ class CrawlEngine:
         combined = extract_page_outputs(
             fetched,
             detail_pattern=cfg.detail_url_pattern,
-            digests=cfg.page_digests
-            or bool(cfg.trap_check_every)
-            or cfg.content_seen
-            or cfg.revalidate,
             redirect_col=redirect_col,
             charset_sniff=cfg.charset_sniff,
             meta_robots=cfg.meta_robots,
@@ -695,10 +691,10 @@ class CrawlEngine:
         pages_meta = wo.where(F.col("kind") == "page")
         fetched_keys = pages_meta.select("url_canon")
 
-        # outlinks → canonicalize → O13 offsite → O18 depth bound
-        links = wo.where(F.col("kind") == "link").select(
-            "url", "src_source", "depth", "out_url"
-        )
+        # outlinks (both ends canonicalized by the extraction pass)
+        # → O13 offsite → O18 depth bound
+        link_cols = ("url", "src_source", "depth", "out_url", "out_canon")
+        links = wo.where(F.col("kind") == "link").select(*link_cols)
         if cfg.content_seen:
             # Mercator content-seen: only FIRST sightings of a content
             # digest expand their outlinks (prior-wave digests win, then
@@ -715,9 +711,7 @@ class CrawlEngine:
             # redirect targets re-enter like outlinks, but bypass the
             # content-seen winnow (a 3xx page has no content to test)
             links = links.unionByName(
-                wo.where(F.col("kind") == "redirect").select(
-                    "url", "src_source", "depth", "out_url"
-                )
+                wo.where(F.col("kind") == "redirect").select(*link_cols)
             )
         from crawlers_spark.functions.domains import same_site
 
@@ -727,13 +721,13 @@ class CrawlEngine:
             else F.col("host") == F.col("allowed_host")
         )
         discovered = (
-            with_canonical_url(links, "out_url", "url_canon")
+            links.withColumn("host", host_col("out_canon"))
             .join(F.broadcast(self.allowed_hosts), "src_source", "left")
             .where(offsite_ok)
             .where(F.col("depth") + 1 <= cfg.max_depth)
             .select(
                 F.col("out_url").alias("url"),
-                "url_canon",
+                F.col("out_canon").alias("url_canon"),
                 "host",
                 F.greatest(F.lit(0), F.lit(100) - (F.col("depth") + 1)).cast("int").alias("priority"),
                 (F.col("depth") + 1).cast("int").alias("depth"),
@@ -1198,9 +1192,10 @@ class CrawlEngine:
         SURVEY §2.1 O2); at web scale the frontier should prefer pages
         many *crawled* pages point to. Between waves:
 
-        1. edges = canonicalized (page url → out_url) from every staged
-           ``kind='link'`` row (the engine already persists these —
-           nothing html-sized is re-read);
+        1. edges = (url_canon → out_canon) of every committed
+           ``kind='link'`` row (``_link_edges``: both ends were
+           canonicalized by the extraction pass — nothing html-sized is
+           re-read, no Python runs);
         2. fixed-point PageRank (bit-identical at any parallelism);
         3. frontier priority := max(current, quantized rank) — the rank
            axis is anchored so an average-rank page ties with seeds
@@ -1222,12 +1217,7 @@ class CrawlEngine:
         wave = self.io.last_committed_wave() + 1
         if not self._kind_paths("link"):
             return {"wave": None, "boosted": 0}
-        links = self._read_wave_out("link").select("url", "out_url")
-        edges = with_canonical_url(
-            with_canonical_url(links, "url", "src_canon", host_out=None),
-            "out_url", "dst_canon", host_out=None,
-        ).select("src_canon", "dst_canon")
-        pr = pagerank_priorities(edges, iterations=iterations)
+        pr = pagerank_priorities(self._link_edges(), iterations=iterations)
         boosted = (
             self._read_frontier()
             .join(pr.withColumnRenamed("priority", "_lr_pri"), "url_canon", "left")
@@ -1259,7 +1249,7 @@ class CrawlEngine:
         every hand-vetted trusted seed, the paper's link-spam shape.
         Between waves:
 
-        1. edges = the same canonicalized staged ``kind='link'`` rows
+        1. edges = the same committed ``kind='link'`` ends
            ``apply_linkrank`` reads;
         2. seed-biased fixed-point TrustRank (bit-identical at any
            parallelism);
@@ -1283,11 +1273,7 @@ class CrawlEngine:
         wave = self.io.last_committed_wave() + 1
         if not self._kind_paths("link"):
             return {"wave": None, "demoted": 0}
-        links = self._read_wave_out("link").select("url", "out_url")
-        edges = with_canonical_url(
-            with_canonical_url(links, "url", "src_canon", host_out=None),
-            "out_url", "dst_canon", host_out=None,
-        ).select("src_canon", "dst_canon")
+        edges = self._link_edges()
         if isinstance(trusted_urls, DataFrame):
             seeds = trusted_urls
         else:
@@ -1385,10 +1371,9 @@ class CrawlEngine:
             )
         ratios, prior = nb_train(labeled, n_buckets=n_buckets)
         if self._kind_paths("link"):
-            links = with_canonical_url(
-                self._read_wave_out("link").select("out_url", "anchor"),
-                "out_url", "dst_canon", host_out=None,
-            ).select("dst_canon", "anchor")
+            links = self._read_wave_out("link").select(
+                F.col("out_canon").alias("dst_canon"), "anchor"
+            )
         else:
             links = self.spark.createDataFrame(
                 [], "dst_canon string, anchor string"
@@ -1471,11 +1456,7 @@ class CrawlEngine:
         )  # driver-sized: one int per committed wave
         if not waves:
             return {"wave": None, "upto": None, "steps": 0}
-        links = self._read_wave_out("link").select("url", "out_url", "wave")
-        links = with_canonical_url(
-            with_canonical_url(links, "url", "src_canon", host_out=None),
-            "out_url", "dst_canon", host_out=None,
-        ).select("src_canon", "dst_canon", "wave")
+        links = self._link_edges("wave")
 
         st = self._read_opic()
         if st is None:
@@ -1527,9 +1508,10 @@ class CrawlEngine:
         commits."""
         from crawlers_spark.operators.anchors import anchor_text_index
 
-        links = self._read_wave_out("link").select("out_url", "anchor")
-        dst = with_canonical_url(links, "out_url", "dst_canon", host_out=None)
-        return anchor_text_index(dst, dst_col="dst_canon")
+        links = self._read_wave_out("link").select(
+            F.col("out_canon").alias("dst_canon"), "anchor"
+        )
+        return anchor_text_index(links, dst_col="dst_canon")
 
     def host_graph(self) -> tuple[DataFrame, DataFrame]:
         """Common-Crawl-style host-level webgraph export over everything
@@ -1541,13 +1523,9 @@ class CrawlEngine:
         Derived output, not state: nothing commits."""
         from crawlers_spark.operators.hostgraph import host_edges, host_nodes
 
-        links = self._read_wave_out("link").select("url", "out_url")
-        hosted = with_canonical_url(
-            with_canonical_url(links, "url", "_src_canon", host_out="src_host"),
-            "out_url",
-            "_dst_canon",
-            host_out="dst_host",
-        ).select("src_host", "dst_host")
+        hosted = self._read_wave_out("link").select(
+            host_col("url_canon").alias("src_host"), host_col("out_canon").alias("dst_host")
+        )
         edges = host_edges(hosted)
         return edges, host_nodes(edges)
 
@@ -1573,13 +1551,8 @@ class CrawlEngine:
         commits."""
         from crawlers_spark.operators.linkrank import related_pages
 
-        links = self._read_wave_out("link").select("url", "out_url")
-        edges = with_canonical_url(
-            with_canonical_url(links, "url", "src_canon", host_out=None),
-            "out_url", "dst_canon", host_out=None,
-        ).select("src_canon", "dst_canon")
         return related_pages(
-            edges, k=k, max_fanout=max_fanout, min_cocite=min_cocite
+            self._link_edges(), k=k, max_fanout=max_fanout, min_cocite=min_cocite
         )
 
     def mirror_hosts(
@@ -1592,9 +1565,8 @@ class CrawlEngine:
         dual of :meth:`trap_signals`' intra-host duplication — a
         flagged pair means one whole host is a copy and the frontier
         can stop paying politeness budget for it. Uses the same
-        visible-text digests the trap gate uses (requires
-        ``cfg.page_digests``, force-enabled with trap gating /
-        content-seen). Derived output; nothing commits."""
+        visible-text digests the trap gate uses (every fetched page row
+        carries one). Derived output; nothing commits."""
         from crawlers_spark.operators.mirrors import mirror_host_pairs
 
         pages = self._read_wave_out("page").select("host", "content_digest")
@@ -1612,9 +1584,8 @@ class CrawlEngine:
         the visible-text digest. Feeds the static canonicalizer's
         strip list with site-specific junk params (`sid`,
         `jsessionid`) no global list knows. Reads only (url,
-        content_digest) from committed page rows (requires
-        ``cfg.page_digests``). Derived output; nothing commits — the
-        operator of record for applying rules is
+        content_digest) from committed page rows. Derived output;
+        nothing commits — the operator of record for applying rules is
         operators/dust.py ``apply_dust_rules``."""
         from crawlers_spark.operators.dust import dust_param_rules
 

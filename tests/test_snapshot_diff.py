@@ -45,7 +45,7 @@ def test_engine_mirror_hosts_surface(spark):
     from tests.test_crawl_e2e import make_engine
 
     fx = ensure_fixture(300)
-    eng = make_engine(spark, fx, "mirror_surface", page_digests=True)
+    eng = make_engine(spark, fx, "mirror_surface")
     eng.run(max_waves=3)
     rows = eng.mirror_hosts(threshold_pct=50).collect()
     assert all(not r["is_mirror"] for r in rows)
@@ -63,7 +63,7 @@ def test_engine_diff_since_and_dust_rules(spark):
     from tests.test_crawl_e2e import make_engine
 
     fx = ensure_fixture(300)
-    eng = make_engine(spark, fx, "diff_since", page_digests=True)
+    eng = make_engine(spark, fx, "diff_since")
     eng.run(max_waves=4)
     pages = {
         r["url_canon"]: r["wave"]
